@@ -472,7 +472,13 @@ def main(argv: list[str] | None = None) -> int:
     if args.cmd == "route-view":
         from etl_spark.cdc.route_epochs import consistent_view
 
-        epoch, views = consistent_view(spark, args.base, args.source)
+        try:
+            epoch, views = consistent_view(spark, args.base, args.source)
+        except FileNotFoundError as e:
+            # no epoch has completed yet, or vacuum expired the versions the
+            # newest marker pins: a JSON error line, not a traceback
+            print(json.dumps({"cmd": "route-view", "error": str(e)}))
+            return 1
         print(json.dumps({
             "epoch": epoch,
             "tables": {name: int(df.count()) for name, df in sorted(views.items())},

@@ -120,20 +120,22 @@ def sync_replica(src: LakeTable, dst: LakeTable) -> SyncStats:
     if horizons:
         # The horizon strings are whatever expunge_tombstones was handed
         # (Spark's to_timestamp is laxer than fromisoformat), and distinct
-        # expunge snapshots may mix naive and tz-aware stamps. A sync must
-        # DEGRADE to the watermark stamp on any parse trouble, never crash
-        # — otherwise one odd horizon string bricks replication forever.
-        try:
-            parsed = []
-            for h in horizons:
+        # expunge snapshots may mix naive and tz-aware stamps. Each horizon
+        # parses on its own: one odd string is skipped, never allowed to
+        # crash the sync or to discard the horizons that do parse; only
+        # when none parses does the stamp degrade to the watermark.
+        parsed = []
+        for h in horizons:
+            try:
                 d = dt.datetime.fromisoformat(str(h))
-                if d.tzinfo is not None:
-                    d = d.astimezone(dt.timezone.utc).replace(tzinfo=None)
-                parsed.append(d)
+            except (ValueError, TypeError):
+                continue
+            if d.tzinfo is not None:
+                d = d.astimezone(dt.timezone.utc).replace(tzinfo=None)
+            parsed.append(d)
+        if parsed:
             stamp_ts = max(parsed) - dt.timedelta(microseconds=1)
             stamp = F.lit(stamp_ts).cast("timestamp")
-        except (ValueError, TypeError):
-            stamp = None
     if stamp is None:
         wm = src.watermark_any()
         stamp = (

@@ -30,11 +30,12 @@ away (round-5 verdict item 5, option B):
   catalog's multi-table commit gives: per-table state lands first,
   visibility flips atomically with one marker write.
 
-Marker writes are crash-safe and idempotent: tmp+fsync+rename (atomic,
-last-writer-wins) and a re-run of a fenced epoch rewrites the marker
-from the tables' CURRENT metadata — the logical state a version pins is
-identical on every re-run (apply is epoch-fenced; compaction between
-runs changes file layout, never logical state).
+Marker writes are crash-safe and write-once: tmp+fsync, then a hard
+link that fails if the marker exists. A re-run of a fenced epoch keeps
+the marker the first completion wrote. Rewriting it from the tables'
+CURRENT metadata would pin epoch k to versions that already hold later
+epochs, and the torn-newest fallback in ``latest_route_epoch`` would
+then serve "epoch k" with epoch-N state.
 """
 
 from __future__ import annotations
@@ -43,6 +44,8 @@ import hashlib
 import json
 import os
 import re
+
+from ..lake.metastore import _create_text, _fsync_dir
 
 ROUTER_EPOCHS_DIR = "_router_epochs"
 
@@ -69,10 +72,9 @@ def mark_route_epoch(
     """Record that ``epoch`` is complete across every destination.
 
     Call ONLY after ``route_batch`` returned for the epoch (every
-    destination either committed or fenced it). Returns the marker path.
+    destination either committed or fenced it). An existing marker for
+    ``epoch`` is left as it is. Returns the marker path.
     """
-    from ..lake.table import _atomic_write_text
-
     dests = dict(tables)
     if rest is not None:
         dests[os.path.basename(os.path.normpath(rest.path))] = rest
@@ -91,7 +93,10 @@ def mark_route_epoch(
     d = _marker_dir(base_path, source)
     os.makedirs(d, exist_ok=True)
     path = os.path.join(d, f"e{int(epoch):012d}.json")
-    _atomic_write_text(path, json.dumps(payload, indent=1))
+    # False when a re-run or a racing router marked the epoch first: the
+    # first marker stands
+    if _create_text(path, json.dumps(payload, indent=1)):
+        _fsync_dir(d)
     return path
 
 

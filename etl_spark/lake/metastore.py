@@ -118,26 +118,11 @@ class PosixMetadataStore(MetadataStore):
 
     def publish_version(self, version: int, payload: str) -> None:
         os.makedirs(self.meta_dir, exist_ok=True)
-        path = self._vpath(version)
-        # tmp name unique per ATTEMPT (pid alone would collide for racing
-        # threads of one process — e.g. concurrent streaming queries)
-        tmp = path + f".tmp.{os.getpid()}.{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            f.write(payload)
-            f.flush()
-            os.fsync(f.fileno())
-        try:
-            os.link(tmp, path)
-        except FileExistsError:
+        if not _create_text(self._vpath(version), payload):
             raise ConcurrentCommitError(
                 f"metadata version v{version}.json already exists — "
                 "concurrent writer?"
             )
-        finally:
-            try:
-                os.remove(tmp)
-            except FileNotFoundError:
-                pass
 
     def read_version(self, version: int) -> str:
         with open(self._vpath(version)) as f:
@@ -228,6 +213,29 @@ def _atomic_write_text(path: str, text: str) -> None:
         f.flush()
         os.fsync(f.fileno())
     os.rename(tmp, path)
+
+
+def _create_text(path: str, text: str) -> bool:
+    """Create-if-absent single-file text write (tmp + fsync + link): link
+    fails with EEXIST if ``path`` exists, so of racing writers exactly one
+    creates it and none overwrites. Returns False when ``path`` already
+    existed. The tmp name is unique per ATTEMPT (pid alone would collide
+    for racing threads of one process)."""
+    tmp = path + f".tmp.{os.getpid()}.{uuid.uuid4().hex[:8]}"
+    with open(tmp, "w") as f:
+        f.write(text)
+        f.flush()
+        os.fsync(f.fileno())
+    try:
+        os.link(tmp, path)
+        return True
+    except FileExistsError:
+        return False
+    finally:
+        try:
+            os.remove(tmp)
+        except FileNotFoundError:
+            pass
 
 
 def _fsync_dir(path: str) -> None:

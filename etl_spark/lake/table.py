@@ -58,7 +58,8 @@ from .metastore import (  # noqa: F401 — _atomic_write_text re-exported
     _atomic_write_text,
     _fsync_dir,
 )
-from .schema import TableSchema, align, project_written
+from . import bucketing
+from .schema import TableSchema, _parse_type, align, project_written
 
 META_DIR = "_meta"
 HINT = "version-hint.text"
@@ -488,6 +489,32 @@ class LakeTable:
         """Deterministic bucket id for a key column (matches write path)."""
         return F.pmod(F.xxhash64(col), F.lit(self.num_buckets)).cast("int")
 
+    def bucket_of(self, key_value) -> int:
+        """The bucket ``bucket_expr`` gives ``key_value``, computed on the
+        driver (``lake.bucketing``) for string and integer keys; other key
+        types fall back to a one-row Spark job."""
+        key_type = next(f.type for f in self.schema().fields
+                        if f.name == self.bucket_key)
+        b = bucketing.bucket_of(key_value, self.num_buckets, key_type)
+        if b is None:
+            b = (
+                self.spark.createDataFrame([(key_value,)], [self.bucket_key])
+                .select(self.bucket_expr(F.col(self.bucket_key)).alias("b"))
+                .first()["b"]
+            )
+        return int(b)
+
+    def _stored_struct(self, schema_version: int) -> T.StructType:
+        """The schema Spark would infer from a file set written under
+        ``schema_version``: the written payload columns plus the stored
+        internals (``_bucket`` is a directory, not a column), all nullable.
+        Passing it to the reader skips the footer-inference job."""
+        fields = [T.StructField(f.name, _parse_type(f.type), True)
+                  for f in self.written_schema(schema_version).fields]
+        fields += [T.StructField(c, _INTERNAL_TYPES[c], True)
+                   for c in INTERNAL_COLS if c != "_bucket"]
+        return T.StructType(fields)
+
     def _empty(self, with_internal: bool) -> DataFrame:
         st = self.schema().to_struct()
         if with_internal:
@@ -519,6 +546,11 @@ class LakeTable:
         Time pruning returns a candidate SUPERSET of the window (file-set
         granularity; tombstone/NULL sets always scan) — callers wanting
         exact bounds apply the residual row filter (``snapshot_df`` does).
+
+        Planning starts no Spark job: each file set's schema comes from
+        table metadata (``_stored_struct``), not footer inference, and the
+        session lists the leaf directories on the driver (see
+        ``session.get_spark``). Jobs start only when the result runs.
         """
         entries, _pruned = self.plan_file_sets(buckets, ts_min, ts_max)
         if not entries:
@@ -533,7 +565,7 @@ class LakeTable:
             )
         parts = []
         for sv, paths in sorted(by_sv.items()):
-            df = self.spark.read.parquet(*paths)
+            df = self.spark.read.schema(self._stored_struct(sv)).parquet(*paths)
             # resolve by FIELD ID against the schema each file set was
             # written with: renames map, dropped-and-readded names NULL
             part = project_written(df, self.written_schema(sv), schema,
@@ -589,13 +621,13 @@ class LakeTable:
         (it commutes with the per-key argmax) so the parquet scan skips
         row groups via dictionary/stats filters, then folds only the
         surviving rows. The read path a transcript-serving API would use —
-        O(one bucket's matching row groups), never O(table)."""
-        b = (
-            self.spark.createDataFrame([(key_value,)], [self.bucket_key])
-            .select(self.bucket_expr(F.col(self.bucket_key)).alias("b"))
-            .first()["b"]
-        )
-        raw = self.read_buckets([int(b)], with_internal=True, fold=False)
+        O(one bucket's matching row groups), never O(table).
+
+        Building the frame starts no Spark job: the bucket is hashed on
+        the driver (``bucket_of``) and the scan is planned from metadata
+        (``read_buckets``); running it costs the fold's jobs only."""
+        raw = self.read_buckets([self.bucket_of(key_value)], with_internal=True,
+                                fold=False)
         hit = raw.where(F.col(self.bucket_key) == F.lit(key_value))
         folded = self._lww_fold(hit)
         return folded.where(~F.coalesce(F.col("_tombstone"), F.lit(False))).select(

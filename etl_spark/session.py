@@ -17,6 +17,21 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Share of physical RAM the default driver heap may take. In local mode the
+# driver JVM holds every executor thread, and the Python workers, the page
+# cache and the OS need the rest; an unset SPARK_GRAFT_DRIVER_MEM must not
+# ask for more heap than the host has.
+DRIVER_MEM_SHARE = 0.5
+_DRIVER_MEM_CAP_MB = 16 * 1024
+
+
+def default_driver_memory() -> str:
+    """Default ``spark.driver.memory``: ``DRIVER_MEM_SHARE`` of physical
+    RAM, at most 16g and at least 512m."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    mb = int(phys * DRIVER_MEM_SHARE) >> 20
+    return f"{max(512, min(_DRIVER_MEM_CAP_MB, mb))}m"
+
 
 def get_spark(
     app_name: str = "etl_spark",
@@ -62,7 +77,8 @@ def get_spark(
         # concurrent open writers skips that sort; day cardinality per
         # batch is far below this cap (falls back to sort-based if not).
         .config("spark.sql.maxConcurrentOutputFileWriters", "64")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory())
         # Throughput-oriented GC: the ingest path is allocation-heavy
         # (struct-max hash agg over wide rows); ParallelGC sustains higher
         # allocation rates than G1 at high task-thread counts in local mode.
@@ -75,6 +91,18 @@ def get_spark(
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.streaming.schemaInference", "false")
+        # List table leaf directories on the driver, never in a Spark job.
+        # Above this many paths InMemoryFileIndex lists them with a job of
+        # one task per path (default threshold 32), and a full LakeTable
+        # read hands it one path per (bucket, day) leaf of every live file
+        # set. Measured at local[4] on a 4-core host (4 buckets x 9 days x
+        # 4 deltas, median of 3): 144 leaves took 2 jobs / 1.37 s with
+        # footer inference and the listing job, 0 jobs / 0.18 s with an
+        # explicit schema and driver listing; one bucket's 36 leaves,
+        # 2 jobs / 0.38 s against 0 jobs / 0.03 s. Data directories are
+        # local POSIX, which the commit path already lists on the driver
+        # (LakeTable._prefetch_commit_stats).
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1000000")
     )
     # Shuffle compression stays ON everywhere, including local[N]. An
     # earlier revision disabled it for single-JVM local mode ("blocks

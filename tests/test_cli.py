@@ -77,3 +77,14 @@ def test_route_view_cli_pins_to_complete_epoch(spark, tmp_path, capsys):
     eng = CdcEngine(spark, str(tmp_path / "spine"), num_buckets=2)
     eng.replay(log)
     assert sum(view["tables"].values()) == eng.table.snapshot_df().count()
+
+
+def test_route_view_cli_without_complete_epoch_fails_as_json(spark, tmp_path, capsys):
+    """Before the router completes any epoch there is nothing to pin:
+    `route-view` prints one JSON error line and exits non-zero instead of
+    a raw traceback."""
+    rc = main(["route-view", "--base", str(tmp_path / "routed")])
+    (line,) = _json_lines(capsys.readouterr().out)
+    assert rc != 0
+    assert line["cmd"] == "route-view"
+    assert "no complete router epoch" in line["error"]

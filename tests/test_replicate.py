@@ -135,3 +135,43 @@ def test_expunged_delete_does_not_block_later_reinsert(spark, tmp_path):
                  for r in dst.snapshot_df().collect())
     assert want == [("k", 0, "revived"), ("x", 0, "other")]
     assert got == want
+
+
+def test_one_malformed_horizon_does_not_discard_the_others(spark, tmp_path):
+    """Expunge horizons parse one by one. A horizon Spark accepted but
+    ``fromisoformat`` rejects ('2025-1-1 ...') is skipped; the orderless
+    delete is still stamped just below the newest VALID horizon, not at
+    the watermark, so a re-insert at that horizon replicates."""
+    import datetime as dt
+
+    from etl_spark.cdc.maintenance import expunge_tombstones
+
+    B = dt.datetime(2025, 1, 1)
+    S = lambda s: B + dt.timedelta(seconds=s)
+    src = CdcEngine(spark, str(tmp_path / "src"), num_buckets=4).table
+    dst = create_replica(src, str(tmp_path / "dst"))
+    apply_batch(src, _batch(spark, [
+        ("I", "j", 0, "user", "j0", None, B, S(0), 1),
+        ("I", "k", 0, "user", "v0", None, B, S(0), 2),
+        ("I", "x", 0, "user", "other", None, B, S(2), 3),
+    ]), epoch=0)
+    sync_replica(src, dst)
+    # j deleted and expunged under a horizon only Spark's parser accepts
+    apply_batch(src, _batch(spark, [
+        ("D", "j", 0, None, None, None, B, S(0.1), 4),
+    ]), epoch=1)
+    assert expunge_tombstones(src, before_op_ts="2025-1-1 00:00:00.2") is not None
+    # k deleted and expunged under a well-formed horizon
+    apply_batch(src, _batch(spark, [
+        ("D", "k", 0, None, None, None, B, S(0.5), 5),
+    ]), epoch=2)
+    assert expunge_tombstones(src, before_op_ts=str(S(1))) is not None
+    st = sync_replica(src, dst)
+    assert st.mode == "incremental"
+    assert {r.conv_id for r in dst.snapshot_df().collect()} == {"x"}
+    apply_batch(src, _batch(spark, [
+        ("I", "k", 0, "user", "revived", None, B, S(1), 6),
+    ]), epoch=3)
+    sync_replica(src, dst)
+    got = sorted((r.conv_id, r.text) for r in dst.snapshot_df().collect())
+    assert got == [("k", "revived"), ("x", "other")]

@@ -637,6 +637,50 @@ def test_consistent_view_survives_torn_fanout(spark, tmp_path):
     assert latest_route_epoch(base, "router")["epoch"] == 1
 
 
+def test_rereplay_keeps_historical_markers(spark, tmp_path):
+    """Markers are write-once: a full re-replay (every epoch fenced) must
+    not rewrite marker e_k from the tables' CURRENT versions. Otherwise
+    e0 would pin epoch-1 state, and once the newest marker is torn the
+    fallback would serve "epoch 0" with epoch-1 rows."""
+    import datetime as dt
+    import os
+
+    from etl_spark.cdc.engine import CHANGE_SCHEMA
+    from etl_spark.cdc.route_epochs import _marker_dir, consistent_view
+    from etl_spark.cdc.router import route_replay
+
+    T = lambda s: dt.datetime(2025, 1, 1, 0, 0, s)
+    log = str(tmp_path / "log")
+    base = str(tmp_path / "routed")
+    for i, rows in enumerate([
+        [("I", "a", 0, "user", "u0", None, T(0), T(1), 1),
+         ("I", "b", 0, "assistant", "a0", None, T(0), T(1), 2)],
+        [("U", "a", 0, "user", "u1", None, T(0), T(3), 3),
+         ("U", "b", 0, "assistant", "a1", None, T(0), T(3), 4)],
+    ]):
+        spark.createDataFrame(rows, schema=CHANGE_SCHEMA).coalesce(1) \
+            .write.parquet(os.path.join(log, f"epoch={i:05d}"))
+
+    for _ in route_replay(spark, log, base, route_col="role"):
+        pass
+    d = _marker_dir(base, "router")
+    e0, e1 = (os.path.join(d, f"e{k:012d}.json") for k in (0, 1))
+    with open(e0) as f:
+        first = f.read()
+
+    for _ in route_replay(spark, log, base, route_col="role"):  # all fenced
+        pass
+    with open(e0) as f:
+        assert f.read() == first
+
+    with open(e1, "w") as f:
+        f.write("{torn")
+    ep, views = consistent_view(spark, base, "router")
+    assert ep == 0
+    assert {r.text for r in views["user"].collect()} == {"u0"}
+    assert {r.text for r in views["assistant"].collect()} == {"a0"}
+
+
 def test_stream_route_writes_epoch_markers(spark, tmp_path):
     """The streaming fan-out publishes the same per-epoch completion
     markers under its checkpoint-scoped fencing source."""
